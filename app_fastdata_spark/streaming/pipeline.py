@@ -854,9 +854,8 @@ def graph_search_stream(
     lifecycle applied to a graph index) and its local optimum is
     appended to the sink. The walk is per-hop iterative, which no
     stream-static join chain can express, so each micro-batch runs the
-    IDENTICAL batch walk via foreachBatch (the start_enriched_swap
-    precedent) — batch/stream parity is the same function by
-    construction, pinned by test anyway. Stateless across batches: the
+    batch walk (similarity.graph_walk_frame) via foreachBatch (the
+    start_enriched_swap precedent). Stateless across batches: the
     graph is static, a query's answer depends only on its own vector.
     Rebuilding the graph = new knn_edges stamp (a model swap), and the
     swap takes effect on the NEXT micro-batch: graph resolution happens
@@ -879,16 +878,14 @@ def graph_search_stream(
     the previously resolved version (retained by the publisher's
     version-keep window) and re-probes next batch."""
     from ..operators.similarity import (
+        graph_corpus,
+        graph_queries,
         graph_walk_frame,
         knn_edges,
-        load_vectors,
-        norm,
-        vec_nonzero,
-        vec_valid,
     )
     from ..tables import file_stamp
 
-    model: dict = {"stamp": None, "heads": []}
+    model: dict = {"stamp": None, "nodes": 0}
 
     def _resolve() -> None:
         if edges_path is not None:
@@ -907,15 +904,8 @@ def graph_search_stream(
             stamp = file_stamp(f"{sf_dir}/embeddings.parquet")
         if model["stamp"] == stamp:
             return
-        emb = load_vectors(spark, sf_dir, nonzero=True)
-        en = emb.select(
-            "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-        )
-        model["en"] = en
-        model["heads"] = [
-            r[0]
-            for r in en.select("vec_id").orderBy("vec_id").limit(2).collect()
-        ]
+        model["en"] = graph_corpus(spark, sf_dir)
+        model["nodes"] = model["en"].limit(2).count()
         if vdir is not None:
             model["edges"] = spark.read.schema(
                 "vec_id long, rank int, neighbor_id long, cos double"
@@ -936,18 +926,12 @@ def graph_search_stream(
         # exactly-once per batch.
         for attempt in (0, 1):
             _resolve()
-            if len(model["heads"]) < 2:
+            if model["nodes"] < 2:
                 return  # <2 graph nodes: no walk (batch-twin contract)
-            q = batch.filter(vec_valid() & vec_nonzero()).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qvec"),
-                norm(F.col("embedding")).alias("qn"),
-            )
             try:
                 graph_walk_frame(
-                    q, model["edges"], model["en"], model["heads"][0],
-                    model["heads"][1],
-                ).write.mode("append").parquet(output_path)
+                    graph_queries(batch), model["edges"], model["en"]
+                ).drop("seed").write.mode("append").parquet(output_path)
                 return
             except Exception:
                 if attempt or edges_path is None:
@@ -972,58 +956,35 @@ def beam_search_stream(
     available_now: bool = True,
 ):
     """The DEPLOYABLE serving configuration at ingest: each arriving
-    vector batch runs the identical factored BEAM loop
-    (similarity.beam_frame — W-wide shared frontier over the stored
-    high-degree NN-descent graph, recall@1 1.00 at sf0.1) and appends
-    its BEAM_TOPK ranked answers to the sink. Same lifecycle as
-    graph_search_stream (stateless across batches, static stored
-    graph, per-batch edge re-resolution through the session cache's
-    stamp key); the beam loop needs the constraint-propagation toggle
-    (see beam_visited_result), applied per batch around the walk —
-    safe because foreachBatch callbacks of one query never overlap."""
+    vector batch runs the batch beam (similarity.beam_frame — W-wide
+    shared frontier over the stored high-degree NN-descent graph,
+    recall@1 1.00 at sf0.1) and appends its BEAM_TOPK ranked answers
+    to the sink. Same lifecycle as graph_search_stream (stateless
+    across batches, static stored graph, per-batch edge re-resolution
+    through the session cache's stamp key); the beam loop needs the
+    constraint-propagation toggle (see beam_conf_guard), applied per
+    batch around the walk — safe because foreachBatch callbacks of one
+    query never overlap."""
     from ..operators.similarity import (
         BEAM_TOPK,
         beam_conf_guard,
         beam_frame,
+        graph_corpus,
+        graph_queries,
         knn_edges_hd,
-        load_vectors,
-        norm,
-        vec_nonzero,
-        vec_valid,
+        rank_visited,
     )
-    from pyspark.sql import Window
 
     def _beam_batch(batch: DataFrame, _epoch: int) -> None:
-        emb = load_vectors(spark, sf_dir, nonzero=True)
-        en = emb.select(
-            "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-        )
         edges = knn_edges_hd(spark, sf_dir).select("vec_id", "neighbor_id")
-        q = batch.filter(vec_valid() & vec_nonzero()).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-            norm(F.col("embedding")).alias("qn"),
-        )
-        # beam_conf_guard: constraint-propagation toggle + process-wide
-        # lock (see similarity.py) over BOTH sessions — foreachBatch
-        # hands the batch a CLONED session whose conf governs
-        # batch-derived frames.
+        # beam_conf_guard over BOTH sessions — foreachBatch hands the
+        # batch a CLONED session whose conf governs batch-derived frames.
         with beam_conf_guard(spark, batch.sparkSession):
-            visited = beam_frame(q, edges, en)
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos"), F.asc("node")
-        )
-        (
-            visited.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= BEAM_TOPK)
-            .select(
-                "query_id",
-                F.col("rank").cast("int").alias("rank"),
-                F.col("node").alias("neighbor_id"),
-                "cos",
+            visited = beam_frame(
+                graph_queries(batch), edges, graph_corpus(spark, sf_dir)
             )
-            .write.mode("append")
-            .parquet(output_path)
+        rank_visited(visited, BEAM_TOPK).write.mode("append").parquet(
+            output_path
         )
 
     writer = vectors.writeStream.foreachBatch(_beam_batch)

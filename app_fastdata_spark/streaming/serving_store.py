@@ -335,8 +335,10 @@ def measure_freshness_lag(
     one small batch can land mid-drain right after an oversized one),
     bounded by `warmup_timeout_s` — if the pipeline genuinely cannot keep up,
     sampling starts anyway and the sustained lag is reported as
-    observed. Returns {p50, p95, n, rows_per_second}; p50/p95 None when
-    fewer than 3 polls observed data.
+    observed. Returns {p50, p95, n, rows_per_second, empty_polls,
+    failed_polls}; p50/p95 None when fewer than 3 polls observed data.
+    A poll of a store that does not exist yet, or holds no rows, counts
+    as empty; a poll whose read raises counts as failed.
 
     shuffle_partitions sizes the stream's stateful agg + upsert to the
     micro-batch data (a few thousand groups/s), not the session-wide
@@ -389,16 +391,22 @@ def measure_freshness_lag(
                 break
         _time.sleep(poll_s)
     t_end = _time.time() + duration_s
+    empty_polls = failed_polls = 0
     try:
         while _time.time() < t_end:
+            newest = None
             try:
-                newest = (
-                    spark.read.parquet(store_path)
-                    .agg(F.max("second_ts"))
-                    .collect()[0][0]
-                )
+                if _path_exists(spark, store_path):
+                    newest = (
+                        spark.read.parquet(store_path)
+                        .agg(F.max("second_ts"))
+                        .collect()[0][0]
+                    )
             except Exception:
-                newest = None  # store not created yet / mid-write listing
+                failed_polls += 1  # e.g. a mid-write listing
+            else:
+                if newest is None:  # not created yet, or no rows
+                    empty_polls += 1
             if newest is not None:
                 # clamp at 0: under update mode the store can already
                 # hold the still-open current second (its END is in the
@@ -415,7 +423,12 @@ def measure_freshness_lag(
         except Exception:
             pass
     staleness.sort()
-    out = {"n": len(staleness), "rows_per_second": rows_per_second}
+    out = {
+        "n": len(staleness),
+        "rows_per_second": rows_per_second,
+        "empty_polls": empty_polls,
+        "failed_polls": failed_polls,
+    }
     if len(staleness) >= 3:
         import math as _math
 

@@ -5,6 +5,7 @@ model-swap behavior, entry smoke).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -2595,6 +2596,45 @@ def test_walk_result_derives_from_trace_single_execution(
         t = max(rows, key=lambda r: r.n_hops)
         want.add((qid, t.node, t.cos, t.n_hops))
     assert got == want and got
+
+
+@pytest.mark.parametrize(
+    "query, twin, store",
+    [
+        ("sim_ann_graph_multiseed", "sim_ann_graph_multiseed_recall",
+         "multiseed_walk"),
+        ("sim_ann_graph_hd", "sim_ann_graph_hd_recall", "hd_walk"),
+        ("sim_ann_graph_beam", "sim_ann_graph_beam_recall", "beam_visited"),
+    ],
+)
+def test_recall_twin_reuses_walk_store(
+    spark, sf_dir, monkeypatch, query, twin, store
+):
+    """A recall twin must read the walk store its query filled, not
+    search again: after the query runs, every search kernel is poisoned
+    and the twin must still answer, with the query's best node as its
+    graph_best."""
+    from app_fastdata_spark.cache import session_clear
+    from app_fastdata_spark.operators import similarity as S
+
+    session_clear(store)
+    rows = [r.asDict() for r in getattr(S, query)(spark, sf_dir).collect()]
+    best = {  # beam answers are ranked: its best node is rank 1
+        r["query_id"]: r.get("best_id", r.get("neighbor_id"))
+        for r in rows
+        if r.get("rank", 1) == 1
+    }
+
+    def poisoned(*a, **k):
+        raise AssertionError(f"{twin} re-ran the search")
+
+    for kernel in ("_seed_walks", "_walk_loop", "beam_frame"):
+        monkeypatch.setattr(S, kernel, poisoned)
+    got = {
+        r.query_id: r.graph_best
+        for r in getattr(S, twin)(spark, sf_dir).collect()
+    }
+    assert got == best and got
 
 
 def test_gemm_seam_auto_selects_by_row_count(spark, sf_dir, monkeypatch):
